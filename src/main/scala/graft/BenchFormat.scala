@@ -51,6 +51,12 @@ object BenchFormat {
     * "[success] Total time: 35640 s (9:54:00), completed <date>" plus
     * surrounding newlines, rounded up. */
   val TrailerWorst = 80
+  /** The newlines that frame the compact line inside the window. */
+  val LineMargin = 2
+  /** Slack in the queries budget beyond its computed reserves: it
+    * absorbs the overruns those reserves do not cover — a `qmore` of
+    * more than 3 digits, or a hidden max above 9999.99 s. */
+  val BudgetSlack = 40
 
   /** f"%.2f" with trailing zeros stripped; always keeps a leading digit
     * so the token stays valid JSON. */
@@ -229,7 +235,7 @@ object BenchFormat {
     val expensiveFirst = ok.sortBy { case (k, ts) => (-ts.head, k) }
     val qBudget = {
       val baseLen = compactWith(entries.size, 9999.99, "").length
-      TailWindow - TrailerWorst - 2 - 40 - baseLen
+      TailWindow - TrailerWorst - LineMargin - BudgetSlack - baseLen
     }
     val qJson = {
       val wrapOverhead = ""","queries":{}""".length + ""","qmore":999""".length

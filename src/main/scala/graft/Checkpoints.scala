@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for ITERATED frames (mmr rerank rounds, graph
-  * bfs/kcore/labelprop loops) with a conf-switched durability tier
+/** Lineage truncation for ITERATED frames (graph bfs/kcore/labelprop
+  * loops) with a conf-switched durability tier
   * (r16 verdict #4).
   *
   * Default — `localCheckpoint()` (eager): blocks live in executor

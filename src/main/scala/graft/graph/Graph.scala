@@ -75,7 +75,8 @@ object Graph {
     * count from the closed form Σ C(out-degree, 2); the oracle replays
     * the definitional wedge-join spelling — two independent algorithms
     * hash-matching is the point. Emits the census (edges, wedges,
-    * triangles) as one row via 1-row broadcast joins. */
+    * triangles) as one row: adj's edge/wedge aggregate crossed with
+    * the triangle sum. */
   val triangles: GQuery = GQuery(
     "graph_triangles",
     (s, dir) => {
@@ -93,19 +94,21 @@ object Graph {
       // pairs (O(E^1.5) rows — 70 M at sf0.1). Out-neighbour lists are
       // O(√E) long under the orientation, so attaching them to each
       // edge and intersecting (codegen'd array_intersect on sorted
-      // sets) shuffles O(E) rows of O(√E) payload instead. The wedge
-      // COUNT is the closed form Σ C(out-degree, 2) — no pair stream
-      // needed for it either.
+      // sets) shuffles O(E) rows of O(√E) payload instead. The edge
+      // rows come from exploding adj's own lists — each (u, v) already
+      // sits next to N⁺(u) there — so only N⁺(v) needs a join. The
+      // wedge COUNT is the closed form Σ C(out-degree, 2) and the edge
+      // count Σ out-degree (every edge is oriented exactly once), both
+      // read off adj — no pair stream needed for either.
       val adj = graft.Caches.persistTracked(
         oriented.groupBy(col("u"))
           .agg(sort_array(collect_set(col("v"))).as("nbrs"), count(lit(1)).as("od")))
-      val tri = oriented
-        .join(adj.select(col("u"), col("nbrs").as("nu")), "u")
+      val tri = adj.select(col("nbrs").as("nu"), explode(col("nbrs")).as("v"))
         .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"), "left")
         .select(size(array_intersect(col("nu"),
           coalesce(col("nv"), expr("CAST(array() AS array<bigint>)")))).cast("long").as("c"))
-      pairs.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(adj.agg(sum(expr("od * (od - 1) DIV 2")).cast("long").as("n_wedges")))
+      adj.agg(sum(col("od")).cast("long").as("n_edges"),
+          sum(expr("od * (od - 1) DIV 2")).cast("long").as("n_wedges"))
         .crossJoin(tri.agg(sum(col("c")).as("n_triangles")))
     },
     Some(s"""

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   * independent); the final divide/sqrt/round on those exact inputs is
   * IEEE-deterministic, making cosine values bit-identical between
   * Spark and the DuckDB oracle. All per-element math runs in
-  * codegen'd higher-order functions (`zip_with`/`aggregate`) — no
-  * UDFs, no collect.
+  * built-in expressions — the codegen'd `dot_long` and higher-order
+  * functions (`transform`/`aggregate`, e.g. the MMR greedy) — no
+  * UDFs, and no data collect: the only driver reads are
+  * [[ivfBalanced]]'s list-size aggregates (≤c rows), control data.
   */
 object Ann {
 
@@ -347,7 +349,13 @@ object Ann {
       .agg(expr("transform(array_sort(collect_list(dm)), x -> x.m)").as("ce"))
 
   private[graft] case class IvfIndex(cents: DataFrame, assign: DataFrame,
-      maxList: Long, lloydSteps: Int, split: Boolean)
+      lloydSteps: Int, split: Boolean) {
+    /** Largest inverted list of the final assignment — one job, run
+      * only when read (the build itself never needs it after the
+      * split). */
+    lazy val maxList: Long =
+      assign.groupBy(col("list_id")).count().agg(max(col("count"))).head().getLong(0)
+  }
 
   /** Balance-guarded IVF index build — the production path for the
     * p99 risk a fixed one-step build leaves open: a degenerate
@@ -366,68 +374,75 @@ object Ann {
     *     candidate set is IDENTICAL, but no single task or list
     *     structure exceeds ~cap rows.
     *
-    * The per-step balance check reads a ≤c-row aggregate on the
-    * driver — an inspection of list SIZES, not a data collect; each
-    * step is one extra corpus pass over the persisted (tracked, see
-    * [[graft.Caches]]) vector frame. `ann_ivf_topk` stays the fixed
-    * one-step construction (the guard's step count depends on runtime
-    * list sizes, which an ahead-of-time SQL oracle cannot replay);
-    * the SPLIT path is oracle-checked by [[ivfBalancedKey]], which
-    * pins `minSteps = maxSteps` and forces the split with a planted
-    * duplicate mass, and AnnSpec pins the adaptive behaviour.
+    * The per-step balance check is ONE job: a ≤c-row
+    * `groupBy(c_id).count()` collected on the driver — an inspection
+    * of list SIZES, not a data collect. Everything the guard needs
+    * comes from it: N (Σ sizes of the first assignment — vec_id is a
+    * key, so every vector is assigned exactly once), the cap, the max
+    * list, and, for the split, each list's `nsub`, which joins as a
+    * broadcast local frame. Each step is one extra corpus pass over
+    * the persisted (tracked, see [[graft.Caches]]) vector frame.
+    * `ann_ivf_topk` stays the fixed one-step construction (the
+    * guard's step count depends on runtime list sizes, which an
+    * ahead-of-time SQL oracle cannot replay); the SPLIT path is
+    * oracle-checked by [[ivfBalancedKey]], which pins `minSteps =
+    * maxSteps` and forces the split with a planted duplicate mass,
+    * and AnnSpec pins the adaptive behaviour and the
+    * one-job-per-step shape.
     * Returns the final centroids, the (vec_id, c_id, list_id)
     * assignment (list_id = struct(c_id, sub); sub is 0 unless split),
-    * the final max list size, steps taken, and whether a split ran. */
+    * steps taken, and whether a split ran; the final max list size is
+    * the index's lazy `maxList`. */
   private[graft] def ivfBalanced(vecsIn: DataFrame, c: Int = IVF_C,
       maxListFactor: Double = 4.0, maxSteps: Int = 2,
       minSteps: Int = 0): IvfIndex = {
     require(minSteps <= maxSteps,
       s"minSteps ($minSteps) must be <= maxSteps ($maxSteps): maxSteps bounds the total Lloyd passes")
     val vecs = graft.Caches.persistTracked(vecsIn)
-    val n = vecs.count()
-    require(n > 0, "ivfBalanced needs a non-empty corpus")
-    val cap = math.max(1L, math.ceil(maxListFactor * n / c).toLong)
-    def withList(a: DataFrame): DataFrame =
-      a.withColumn("list_id", struct(col("c_id"), lit(0L).as("sub")))
-    def maxListOf(a: DataFrame): Long =
-      a.groupBy(col("list_id")).count().agg(max(col("count"))).head().getLong(0)
+    def sizesOf(a: DataFrame): Map[Long, Long] =
+      a.groupBy(col("c_id")).count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every iteration's cents/assign are persisted (tracked): both are
     // TINY relative to their compute (≤c centroid rows; (vec_id, c_id)
     // pairs vs an N×c cosine cross-join) — the profile where persist
-    // pays — and each is read several times (the balance check, the
-    // next Lloyd step's lineage, the split aggregates, the returned
-    // index). Without this, step k's check re-executes every previous
-    // step's full assignment pipeline.
+    // pays — and each is read several times (the size check, the
+    // next Lloyd step's lineage, the split, the returned index).
+    // Without this, step k's check re-executes every previous step's
+    // full assignment pipeline. assign is cached exactly as
+    // ivfAssign's plan, so the Lloyd step's own ivfAssign call reads
+    // the cache instead of redoing the N×c cross-join.
     def tracked(df: DataFrame): DataFrame = graft.Caches.persistTracked(df)
     var cents = tracked(ivfSeeds(vecs, c))
-    var assign = tracked(withList(ivfAssign(vecs, cents)))
-    var m = maxListOf(assign)
+    var assign = tracked(ivfAssign(vecs, cents))
+    var sizes = sizesOf(assign)
+    val n = sizes.values.sum
+    require(n > 0, "ivfBalanced needs a non-empty corpus")
+    val cap = math.max(1L, math.ceil(maxListFactor * n / c).toLong)
     var steps = 0
     // minSteps: unconditional Lloyd refinement before the balance
     // guard engages — lets a caller anchor the index to a FIXED
     // construction (e.g. Dedup.semanticBalanced passes 1 so the
     // split-free case reproduces semanticFrom's seeds→one-Lloyd-step
     // clustering exactly); maxSteps still bounds the total
-    while (steps < minSteps || (m > cap && steps < maxSteps)) {
+    while (steps < minSteps || (sizes.values.max > cap && steps < maxSteps)) {
       cents = tracked(ivfLloydStep(vecs, cents))
-      assign = tracked(withList(ivfAssign(vecs, cents)))
+      assign = tracked(ivfAssign(vecs, cents))
       steps += 1
-      m = maxListOf(assign)
+      sizes = sizesOf(assign)
     }
-    val didSplit = m > cap
-    if (didSplit) {
-      val nsub = assign.groupBy(col("c_id")).agg(count(lit(1)).as("sz"))
-        .select(col("c_id"), ceil(col("sz") / lit(cap)).cast("long").as("nsub"))
-      assign = tracked(assign.drop("list_id").join(broadcast(nsub), Seq("c_id"))
+    val didSplit = sizes.values.max > cap
+    val lists = if (didSplit) {
+      val nsub = vecs.sparkSession.createDataFrame(sizes.toSeq.map { case (cid, sz) =>
+        (cid, math.ceil(sz.toDouble / cap).toLong)
+      }).toDF("c_id", "nsub")
+      tracked(assign.join(broadcast(nsub), Seq("c_id"))
         .withColumn("list_id", struct(col("c_id"),
           when(col("nsub") <= 1, lit(0L))
             .otherwise(pmod(
               conv(substring(md5(col("vec_id").cast("string")), 1, 12), 16, 10).cast("long"),
               col("nsub"))).as("sub")))
         .select(col("vec_id"), col("c_id"), col("list_id")))
-      m = maxListOf(assign)
-    }
-    IvfIndex(cents, assign, m, steps, didSplit)
+    } else assign.withColumn("list_id", struct(col("c_id"), lit(0L).as("sub")))
+    IvfIndex(cents, lists, steps, didSplit)
   }
 
   /** IVF-Flat ANN — the other standard scale path (complementing
@@ -954,36 +969,74 @@ object Ann {
       FROM pick JOIN embeddings t ON pick.query_id = t.vec_id"""),
     tags = Set("similarity"))
 
+  /** Unrounded cosine of two quantized vectors, the double the MMR
+    * greedy compares: exact integer dot and norms, then one divide of
+    * a product of square roots (the same expression order as the
+    * oracle's, so the value is bit-identical). */
+  private def rawCosine(a: Column, b: Column): Column =
+    call_function("dot_long", a, b).cast("double") /
+      (sqrt(call_function("dot_long", a, a).cast("double")) *
+        sqrt(call_function("dot_long", b, b).cast("double")))
+
+  /** The MMR greedy over per-query candidate rows `cand` (query_id,
+    * vec_id, cosine, e): each query's candidates are collected into
+    * one array and the K picks are made by one `aggregate`
+    * higher-order function whose accumulator is the picked list, so
+    * the per-query greedy state is carried through a single pass. A
+    * pick is the max of struct(key, −vec_id, …) over the
+    * not-yet-picked pool: key is the relevance `cosine` in round 1
+    * and the MMR score `0.7·cosine − 0.3·max sim-to-picked` after it,
+    * so ties break on the smaller vec_id. Returns (query_id, vec_id,
+    * round, score) with the score unrounded. */
+  private[graft] def mmrGreedy(cand: DataFrame): DataFrame = {
+    val picked = "array<struct<key:double,nid:bigint,vec_id:bigint,score:double,e:array<bigint>>>"
+    val picks = aggregate(
+      sequence(lit(1), least(lit(K), size(col("cs")))),
+      array().cast(picked),
+      (acc, _) => {
+        val pool = filter(col("cs"),
+          c => !exists(acc, p => p.getField("vec_id") === c.getField("vec_id")))
+        val first = size(acc) === 0
+        concat(acc, array(array_max(transform(pool, c => {
+          val rel = c.getField("cosine")
+          val score = when(first, lit(0.7) * rel).otherwise(lit(0.7) * rel - lit(0.3) *
+            array_max(transform(acc, p => rawCosine(c.getField("e"), p.getField("e")))))
+          struct(when(first, rel).otherwise(score).as("key"),
+            (-c.getField("vec_id")).as("nid"), c.getField("vec_id").as("vec_id"),
+            score.as("score"), c.getField("e").as("e"))
+        }))))
+      })
+    cand.groupBy(col("query_id"))
+      .agg(collect_list(struct(col("vec_id"), col("cosine"), col("e"))).as("cs"))
+      .select(col("query_id"), posexplode(picks).as(Seq("i", "p")))
+      .select(col("query_id"), col("p.vec_id").as("vec_id"),
+        (col("i") + 1).cast("long").as("round"), col("p.score").as("score"))
+  }
+
   /** MMR DIVERSIFIED RE-RANKING (Carbonell/Goldstein maximal marginal
     * relevance, the standard result-diversification pass after any
     * top-k retrieval): greedily pick 5 of the top-20 candidates
     * maximizing `0.7·rel − 0.3·max-sim-to-already-picked`. The greedy
-    * loop is inherently sequential in k, so it is UNROLLED into 4
-    * static join rounds — but every round's frames are bounded by the
-    * fixed candidate set (≤20 rows and one 20×20 sim block per
-    * query) and keyed by query_id, so a million concurrent queries
-    * diversify embarrassingly parallel with zero cross-query
-    * coordination; nothing in the plan grows with the corpus (only
-    * [[cosineTopk]]'s candidate generation sees N). Determinism: rel
-    * and pairwise sims are unrounded doubles from exact quantized
-    * integers, λ = 0.7 parses to the identical IEEE double in both
-    * engines, ties break on vec_id; only the emitted score rounds
-    * (6 dp).
+    * loop is inherently sequential in k, so it runs per query inside
+    * one higher-order `aggregate` ([[mmrGreedy]]) over that query's
+    * ≤20 collected candidates — every query's state is bounded by the
+    * fixed candidate set and keyed by query_id, so a million
+    * concurrent queries diversify embarrassingly parallel with zero
+    * cross-query coordination; nothing in the plan grows with the
+    * corpus (only [[cosineTopk]]'s candidate generation sees N).
+    * Determinism: rel and pairwise sims are unrounded doubles from
+    * exact quantized integers, λ = 0.7 parses to the identical IEEE
+    * double in both engines, ties break on vec_id; only the emitted
+    * score rounds (6 dp).
     *
-    * Lineage discipline (the [[graft.graph.Graph]] kcore lesson,
-    * A/B-measured at sf0.1, dev/BENCH_NOTES.md): the three iterated
-    * frames — cand, sims, and each round's picked set — are EAGER
-    * [[graft.Checkpoints.truncate]] calls (executor-local blocks by
-    * default; reliable checkpoint under
-    * `spark.graft.checkpoint.reliable` — recovery contract on that
-    * object), truncating the plan that otherwise regrows
-    * through the 4 unrolled rounds: 12.8 s lineage-recomputed →
-    * 3.3 s checkpointed (health-accepted). `persist()` instead of
-    * checkpointing was tried and REFUTED (32.6 s: it defeats the
-    * ReusedExchange dedup of the candidate subtree and replaces it
-    * with InMemoryRelation round trips). All checkpointed frames are
-    * probe-sized (≤ 20 rows and one 20×20 block per query), never
-    * corpus-sized. */
+    * Lineage discipline: there is no iterated frame to truncate. The
+    * top-20 window already partitions the candidates by query_id, so
+    * collecting them per query adds no exchange, and the whole key is
+    * one pass: candidate scoring, the window, one aggregate (the
+    * Incremental Top-K Similarity idea, EDBT 2020 — carry the greedy
+    * state through the pass rather than recompute it per round).
+    * AnnSpec pins the stage count and that the plan scans no
+    * checkpointed RDD. */
   val mmrRerank: GQuery = GQuery(
     "ann_mmr_rerank",
     (s, dir) => {
@@ -994,47 +1047,11 @@ object Ann {
       val c = emb.select(col("vec_id"), quant.as("e"))
       val wc = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
       val cand = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          expr("dot_long(qe, e)").cast("double") /
-            (sqrt(expr("dot_long(qe, qe)").cast("double")) *
-              sqrt(expr("dot_long(e, e)").cast("double"))))
+        .withColumn("cosine", rawCosine(col("qe"), col("e")))
         .withColumn("rk", row_number().over(wc))
         .filter(col("rk") <= 20)
         .select(col("query_id"), col("vec_id"), col("cosine"), col("e"))
-        .transform(graft.Checkpoints.truncate(s))
-      val sims = cand.select(col("query_id"), col("vec_id").as("va"), col("e").as("ea"))
-        .join(cand.select(col("query_id"), col("vec_id").as("vb"), col("e").as("eb")),
-          Seq("query_id"))
-        .filter(col("va") =!= col("vb"))
-        .withColumn("sim",
-          expr("dot_long(ea, eb)").cast("double") /
-            (sqrt(expr("dot_long(ea, ea)").cast("double")) *
-              sqrt(expr("dot_long(eb, eb)").cast("double"))))
-        .select(col("query_id"), col("va"), col("vb"), col("sim"))
-        .transform(graft.Checkpoints.truncate(s))
-      val bare = cand.select(col("query_id"), col("vec_id"), col("cosine"))
-      var sel = bare
-        .withColumn("pk", row_number().over(wc))
-        .filter(col("pk") === 1)
-        .select(col("query_id"), col("vec_id"),
-          (lit(0.7) * col("cosine")).as("score"), lit(1L).as("round"))
-      for (r <- 2 to 5) {
-        val picked = sel.select(col("query_id"), col("vec_id")).transform(graft.Checkpoints.truncate(s))
-        val ms = sims
-          .join(picked.withColumnRenamed("vec_id", "vb"), Seq("query_id", "vb"))
-          .groupBy(col("query_id"), col("va").as("vec_id"))
-          .agg(max(col("sim")).as("m"))
-        val ws = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
-        val next = bare
-          .join(ms, Seq("query_id", "vec_id"))
-          .join(picked, Seq("query_id", "vec_id"), "left_anti")
-          .withColumn("score", lit(0.7) * col("cosine") - lit(0.3) * col("m"))
-          .withColumn("pk", row_number().over(ws))
-          .filter(col("pk") === 1)
-          .select(col("query_id"), col("vec_id"), col("score"), lit(r.toLong).as("round"))
-        sel = sel.unionByName(next)
-      }
-      sel.select(col("query_id"), col("vec_id"), col("round"),
+      mmrGreedy(cand).select(col("query_id"), col("vec_id"), col("round"),
         round(col("score"), 6).as("mmr6"))
     },
     Some {

@@ -155,6 +155,21 @@ class AnnSpec extends SparkSpecBase {
     } finally Caches.release()
   }
 
+  test("ivfBalanced issues one size job per step and none for the split") {
+    try {
+      // minSteps = maxSteps = 1 on the duplicate-mass corpus: the seed
+      // assignment and the one Lloyd step each cost one ≤c-row size
+      // collect; the split reuses the last one (nsub is a local frame)
+      val (idx, c) = StageCounter(spark.sparkContext)(
+        similarity.Ann.ivfBalanced(guardCorpus(800, 600), minSteps = 1, maxSteps = 1))
+      assert(idx.split && idx.lloydSteps == 1, s"expected one step then a split: $idx")
+      assert(c.executions == 2, s"expected 2 size jobs (seed + 1 step), got ${c.executions}")
+      // the post-split max list is read only on demand
+      val (_, m) = StageCounter(spark.sparkContext)(idx.maxList)
+      assert(m.executions == 1, s"maxList ran ${m.executions} jobs")
+    } finally Caches.release()
+  }
+
   test("approx-quantile rank contract: tie range straddles the band on a point-mass distribution") {
     // 40% of rows share the median value: the naive count(<=v)/n = 0.7
     // would false-fail even though the sketch is exactly right; the
@@ -281,5 +296,70 @@ class AnnSpec extends SparkSpecBase {
         .filter(col("vec_id") =!= col("bf")).isEmpty,
         "MMR round 1 must be the relevance argmax")
     } finally got.unpersist()
+  }
+
+  test("mmr greedy equals a plain-Scala reference greedy on random candidate sets (property)") {
+    graft.functions.GraftFunctions.register(spark)
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def dot(a: Seq[Long], b: Seq[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    def rawCos(a: Seq[Long], b: Seq[Long]): Double =
+      dot(a, b).toDouble / (math.sqrt(dot(a, a).toDouble) * math.sqrt(dot(b, b).toDouble))
+    // 3-dim vectors over 5 values and pools drawn WITH repetition from
+    // a handful of distinct vectors: duplicate vectors under distinct
+    // vec_ids give exact relevance and MMR-score ties, so the vec_id
+    // tie-break decides picks
+    val vec = Gen.listOfN(3, Gen.choose(-2L, 2L)).map(v => if (v.forall(_ == 0L)) 1L :: v.tail else v)
+    val query = for {
+      q <- vec
+      base <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, vec))
+      n <- Gen.choose(1, 20)
+      ids <- Gen.pick(n, 0L until 200L)
+      es <- Gen.listOfN(n, Gen.oneOf(base))
+    } yield (q, ids.toList.zip(es))
+    val queries = (0 until 120).flatMap(i => query.apply(Gen.Parameters.default, Seed(7000L + i)))
+    val rows = queries.zipWithIndex.flatMap { case ((q, cands), qid) =>
+      cands.map { case (v, e) => (qid.toLong, v, rawCos(q, e), e) }
+    }
+    // plain-Scala greedy: round 1 = relevance argmax, then argmax of
+    // 0.7·cos − 0.3·max sim-to-picked; ties to the smaller vec_id
+    def greedy(cands: Seq[(Long, Double, Seq[Long])]): Seq[(Long, Long, Double)] = {
+      val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long], Double)]
+      while (picked.size < math.min(5, cands.size)) {
+        val pool = cands.filterNot(c => picked.exists(_._1 == c._1))
+        val scored = pool.map { case (v, cos, e) =>
+          val score =
+            if (picked.isEmpty) 0.7 * cos else 0.7 * cos - 0.3 * picked.map(p => rawCos(e, p._2)).max
+          (if (picked.isEmpty) cos else score, v, score, e)
+        }
+        val best = scored.reduce((a, b) => if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
+        picked += ((best._2, best._4, best._3))
+      }
+      picked.zipWithIndex.map { case ((v, _, sc), i) => (v, i + 1L, sc) }.toSeq
+    }
+    val want = rows.groupBy(_._1).toSeq.flatMap { case (qid, rs) =>
+      greedy(rs.map(r => (r._2, r._3, r._4))).map { case (v, r, sc) => (qid, v, r, sc) }
+    }.toSet
+    import TestSession.spark.implicits._
+    val got = similarity.Ann.mmrGreedy(rows.toDF("query_id", "vec_id", "cosine", "e"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    // the generator really exercised the tie-break: many queries hold
+    // two candidates of equal relevance
+    val tied = rows.groupBy(_._1).values.count(rs => rs.map(_._3).distinct.size < rs.size)
+    assert(tied >= 20, s"only $tied queries with a relevance tie")
+    assert(got.size == want.size && got == want,
+      (got.diff(want).take(3) ++ want.diff(got).take(3)).mkString("; "))
+  }
+
+  test("mmr rerank is one pass: pinned stage count, no checkpointed scan") {
+    // the query-side broadcast, the candidate scoring's shuffle map
+    // stage, and the window + greedy result stage
+    val df = SparkEntry.queries("ann_mmr_rerank")(spark, sfDir)
+    val (_, c) = StageCounter(spark.sparkContext)(
+      df.write.format("noop").mode("overwrite").save())
+    assert(c.stages == 3, s"ann_mmr_rerank submitted ${c.stages} stages")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("ExistingRDD") && !plan.contains("LogicalRDD"),
+      s"checkpointed scan in the MMR plan:\n$plan")
   }
 }

@@ -42,13 +42,13 @@ class BenchFormatSpec extends AnyFunSuite {
       loads = (31.99, 32.01), stealPct = 1.25,
       warmMid = Seq.fill(chunkCount + 8)(101.55), layoutSec = 999.99,
       chunks = (chunkCount, chunkCount - 3, 9))
-    assert(l.compact.length + BenchFormat.TrailerWorst + 2 <= BenchFormat.TailWindow,
+    assert(l.compact.length + BenchFormat.TrailerWorst + BenchFormat.LineMargin <= BenchFormat.TailWindow,
       s"compact line ${l.compact.length} chars cannot parse behind the sbt trailer")
     // the realistic case also fits — the queries fill is budgeted, not
     // bounded by luck (r17 verdict #1: the fill must never overflow the
     // window it exists to ride)
     val quiet = mk(res(Map.empty), "0.1", 3, Seq(0.2, 0.31, 0.3), (0.1, 0.2))
-    assert(quiet.compact.length + BenchFormat.TrailerWorst + 2 <= BenchFormat.TailWindow,
+    assert(quiet.compact.length + BenchFormat.TrailerWorst + BenchFormat.LineMargin <= BenchFormat.TailWindow,
       s"compact grew to ${quiet.compact.length} chars")
   }
 

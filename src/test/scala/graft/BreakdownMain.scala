@@ -65,11 +65,11 @@ object BreakdownMain {
     else s"""{"n": ${m.value}}"""
 
   private def jsonWalk(p: SparkPlan, depth: Int, sb: StringBuilder): Unit = {
+    // node and metric names lose quotes, backslashes and control
+    // characters (a newline or tab would split or corrupt the JSONL line)
+    def clean(s: String): String = s.replaceAll("[\"\\\\\\p{Cntrl}]", "")
     val ms = p.metrics.toSeq.filter(_._2.value > 0).sortBy(_._1)
-      .map { case (n, m) => s""""${n.replaceAll("[\"\\\\]", "")}": ${metricJson(m)}""" }
-    // node names get the same quote/backslash scrub as metric names so
-    // no name can break the JSONL dump (r17 advice)
-    def clean(s: String): String = s.replaceAll("[\"\\\\]", "")
+      .map { case (n, m) => s""""${clean(n)}": ${metricJson(m)}""" }
     sb.append(s"""{"depth": $depth, "node": "${clean(p.nodeName)}", "metrics": {${ms.mkString(", ")}}}""")
       .append('\n')
     p match {
